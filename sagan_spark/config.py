@@ -13,7 +13,7 @@ same role is played by a ``sagan_spark.yaml`` consumed by
       - rules/base.rules
       - rules/extra.rules
     engine:
-      match_mode: auto                # auto | fused | hybrid | udf
+      match_mode: auto                # auto | fused | hybrid
       fold_dims: true
       shuffle_partitions: 4096
       state_ttl_minutes: 30           # streaming state eviction
@@ -74,7 +74,7 @@ class PipelineConfig:
     def __post_init__(self) -> None:
         if self.mode not in ("batch", "resumable", "stream", "dynamic"):
             raise ValueError(f"unknown mode {self.mode!r}")
-        if self.match_mode not in ("auto", "fused", "hybrid", "udf"):
+        if self.match_mode not in ("auto", "fused", "hybrid"):
             raise ValueError(f"unknown match_mode {self.match_mode!r}")
 
 

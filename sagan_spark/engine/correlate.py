@@ -35,7 +35,8 @@ pandas oracle):
 from __future__ import annotations
 
 import os
-from collections.abc import Iterable, Iterator
+from collections.abc import Callable, Iterable, Iterator
+from functools import partial
 
 import numpy as np
 import pandas as pd
@@ -69,22 +70,30 @@ def counter_emit(rule: Rule, counters: dict, key, t: float) -> bool:
 
 
 class _ReplayCarry:
-    """Correlation state carried ACROSS bounded replay chunks of one
-    sorted partition (r6 — the implementation behind SURVEY §4.2's
-    "chunk replay if > 1e6" spill mitigation). One instance per
-    partition; chunk boundaries fall on (conv_id, turn_idx)-run
+    """One conversation-ordered replay's state, carried ACROSS bounded
+    replay chunks of one sorted partition (the implementation behind
+    SURVEY §4.2's "chunk replay if > 1e6" spill mitigation) and across
+    micro-batches by the streaming conv state function, which seeds it
+    from its state blob. Chunk boundaries fall on (conv_id, turn_idx)-run
     boundaries, so a conversation's counters/bits flow through unbroken
     and the non-contiguity guard still sees every conv transition."""
 
     __slots__ = ("counters", "bits", "cur_conv", "seen_convs")
 
     def __init__(self) -> None:
-        # per current conv: sid (or (sid, tool) for track="conv_tool") ->
-        # (window_start, count)
-        self.counters: dict = {}
+        # per current conv: str(sid) (or f"{sid}|{tool!r}" for
+        # track="conv_tool") -> (window_start, count). String keys are the
+        # streaming state blob's JSON form, so a blob round-trips as is.
+        self.counters: dict[str, tuple[float, int]] = {}
         self.bits: dict[str, tuple[float, float | None]] = {}  # bit -> (set_ts, expire)
         self.cur_conv: str | None = None
         self.seen_convs: set = set()
+
+
+def _run_starts(conv: np.ndarray, turn: np.ndarray) -> np.ndarray:
+    """Positions (> 0) where a new (conv_id, turn_idx) run starts in
+    sorted key arrays."""
+    return np.flatnonzero((conv[1:] != conv[:-1]) | (turn[1:] != turn[:-1])) + 1
 
 
 def _replay_sorted(rules_by_sid: dict[int, Rule], pdf: pd.DataFrame) -> pd.DataFrame:
@@ -98,11 +107,14 @@ def _replay_sorted(rules_by_sid: dict[int, Rule], pdf: pd.DataFrame) -> pd.DataF
 def _replay_sorted_carry(
     rules_by_sid: dict[int, Rule], pdf: pd.DataFrame, carry: _ReplayCarry
 ) -> pd.DataFrame:
-    """One chunk of `_replay_sorted`, reading and mutating ``carry``. The
-    chunk must start and end on (conv_id, turn_idx)-run boundaries
-    (checks see pre-turn state, so a half-seen run would evaluate bit
-    checks before the run's remaining set actions are known)."""
-    n = len(pdf)
+    """The engine's ONE per-conversation replay kernel: one chunk of
+    `_replay_sorted` (batch) or one conversation's micro-batch (streaming,
+    ``streaming.pipeline._make_state_fn``), reading and mutating
+    ``carry``. Per (conv_id, turn_idx) run it checks isset/isnotset
+    against the pre-turn bits, updates counters through `counter_emit`
+    and applies the run's staged set/unset actions after it. The chunk
+    must start and end on run boundaries (a half-seen run would evaluate
+    bit checks before the run's remaining set actions are known)."""
     conv = pdf["conv_id"].to_numpy()
     turn = pdf["turn_idx"].to_numpy()
     sid = pdf["sid"].to_numpy()
@@ -111,7 +123,9 @@ def _replay_sorted_carry(
     stateful = np.isin(sid, np.fromiter(rules_by_sid.keys(), dtype=np.int64))
     fires = ~stateful  # stateless alerts pass through; stateful must earn it
     idxs = np.flatnonzero(stateful)
-    m = len(idxs)
+    c = conv[idxs]
+    # (conv, turn)-run starts among the stateful rows
+    starts = np.r_[0, _run_starts(c, turn[idxs])] if len(idxs) else idxs
 
     counters = carry.counters
     bits = carry.bits
@@ -126,20 +140,14 @@ def _replay_sorted_carry(
     # known cause.)
     seen_convs = carry.seen_convs
 
-    i = 0
-    while i < m:
-        # one (conv, turn) run of stateful rows — checks see pre-turn
-        # state, sets apply after the run
-        j = i + 1
-        while j < m and conv[idxs[j]] == conv[idxs[i]] and turn[idxs[j]] == turn[idxs[i]]:
-            j += 1
-        if conv[idxs[i]] != carry.cur_conv:
+    for i, j in zip(starts, [*starts[1:], len(idxs)]):
+        if c[i] != carry.cur_conv:
             if carry.cur_conv is not None:
                 seen_convs.add(carry.cur_conv)
-            if conv[idxs[i]] in seen_convs:
+            if c[i] in seen_convs:
                 raise RuntimeError(
                     f"replay partition is not conv-contiguous: conversation "
-                    f"{conv[idxs[i]]!r} reappears after other conversations. "
+                    f"{c[i]!r} reappears after other conversations. "
                     "The input partition lost its (conv_id, turn_idx) sort — "
                     "if reading a bucketed table, keep "
                     "spark.sql.sources.bucketing.autoBucketedScan.enabled="
@@ -147,7 +155,8 @@ def _replay_sorted_carry(
                 )
             counters.clear()
             bits.clear()
-            carry.cur_conv = conv[idxs[i]]
+            carry.cur_conv = c[i]
+        # one (conv, turn) run — checks see pre-turn state, sets apply after
         pending_sets: list[tuple[str, str, float, float | None]] = []
         for k in idxs[i:j]:
             rule = rules_by_sid[int(sid[k])]
@@ -165,8 +174,9 @@ def _replay_sorted_carry(
             if (rule.after or rule.threshold) is not None:
                 # by_both (track="conv_tool"): the counter key is the
                 # (sid, tool) pair WITHIN the conversation — the (src, dst)
-                # composite of [PUB src/after.c]'s by_both, transposed
-                key = (rule.sid, tool[k]) if rule.track == "conv_tool" else rule.sid
+                # composite of [PUB src/after.c]'s by_both, transposed;
+                # repr() keeps a None tool distinct from the string 'None'
+                key = f"{rule.sid}|{tool[k]!r}" if rule.track == "conv_tool" else str(rule.sid)
                 emit = counter_emit(rule, counters, key, t)
             for fb in rule.flexbits:
                 if fb.action in ("set", "unset"):
@@ -179,7 +189,6 @@ def _replay_sorted_carry(
                 bits[name] = (t, exp)
             else:
                 bits.pop(name, None)
-        i = j
     return pdf.loc[fires]
 
 
@@ -242,20 +251,75 @@ def _replay_tracked_carry(
 _UNSET = object()
 
 
-def run_correlate(alerts: DataFrame, ruleset: RuleSet, scope: str = "all") -> DataFrame:
+def _last_run_boundary(pdf: pd.DataFrame) -> int:
+    """Row position of the last (conv_id, turn_idx)-run start in a sorted
+    frame; 0 when the whole frame is one run."""
+    starts = _run_starts(pdf["conv_id"].to_numpy(), pdf["turn_idx"].to_numpy())
+    return int(starts[-1]) if len(starts) else 0
+
+
+def _chunked_replay(
+    chunk_rows: int,
+    make_replay: Callable[[], Callable[[pd.DataFrame], pd.DataFrame]],
+    last_boundary: Callable[[pd.DataFrame], int],
+) -> Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]]:
+    """The mapInPandas function of one replay branch. Spill guard
+    (SURVEY §4.2): a partition is normally replayed as one frame (bounded
+    by rows-per-shuffle-partition), but a pathological hot conversation
+    can make one partition's alert slice arbitrarily large — the measured
+    straggler turns stage-dominant around ~3×10⁵ matched turns in one
+    conv (BENCH/TUNING.md skew rows). Once ``chunk_rows`` rows are
+    buffered, the frame up to ``last_boundary(frame)`` is replayed and the
+    rest stays buffered; ``make_replay()`` gives each partition one replay
+    callable whose carried state flows across its chunks — memory bounded
+    by ~chunk_rows + one unsplittable run, identical output (tests force a
+    tiny chunk size)."""
+
+    def replay_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        replay = make_replay()
+        buf: list[pd.DataFrame] = []
+        nbuf = 0
+        for b in batches:
+            if not len(b):
+                continue
+            buf.append(b)
+            nbuf += len(b)
+            if nbuf < chunk_rows:
+                continue
+            pdf = buf[0] if len(buf) == 1 else pd.concat(buf, ignore_index=True)
+            split = last_boundary(pdf)
+            if split == 0:
+                buf = [pdf]  # one giant run (sids × one turn) — keep buffering
+                continue
+            out = replay(pdf.iloc[:split])
+            if len(out):
+                yield out
+            nbuf = len(pdf) - split
+            buf = [pdf.iloc[split:]] if nbuf else []
+        if nbuf:
+            out = replay(buf[0] if len(buf) == 1 else pd.concat(buf, ignore_index=True))
+            if len(out):
+                yield out
+
+    return replay_partition
+
+
+def run_correlate(alerts: DataFrame, ruleset: RuleSet, scope: str = "linear") -> DataFrame:
     """Apply stateful correlation.
 
-    scope="all" (default): ONE shuffle of all alerts by conv_id; stateless
-    rows pass through the replay untouched. Single-pass — the upstream
-    match stage is computed exactly once with no persist needed, and the
-    resulting partitioning (hash(conv_id), sorted by turn) is exactly what
-    the sink writers want. Preferred when alerts ≲ input (always, for a
-    sane rule set).
-
-    scope="split": shuffle only stateful-sid rows; stateless alerts bypass
-    via filter + union. Halves shuffle volume when stateful sids are rare,
-    BUT both branches recompute the parent unless the caller persists it —
-    use with a persisted upstream for very high alert-volume workloads.
+    Conv-keyed rules: strictly ONE consumer of the match subtree — every
+    alert row takes the conv_id shuffle and flows through the sorted
+    replay (stateless sids pass through inside `_replay_sorted`). Costs
+    an Arrow round-trip for pass-through alerts, but every cost here
+    (shuffle write/read, sort, Arrow, replay) is per-task parallel — no
+    persist, no double-compute. Branching alternatives don't scale:
+    exchange reuse can NEVER deduplicate a dual-consumer plan whose
+    subtree contains a Python stage (MapInPandas does not canonicalize
+    equal across branches — verified empirically: a pushdown-barriered
+    identical exchange still executed twice), and a persist
+    materialization contends on the block manager/disk instead of
+    scaling with cores. ``scope`` names this plan; "linear" is the only
+    value.
 
     Non-conv tracked rules (Sagan `by_username` → role, `by_dst` → tool)
     take a SEPARATE branch per track column: their rows repartition by the
@@ -269,6 +333,8 @@ def run_correlate(alerts: DataFrame, ruleset: RuleSet, scope: str = "all") -> Da
     make the plan dual-consumer, so callers should persist the upstream
     (pipeline.build_alerts does this automatically).
     """
+    if scope != "linear":
+        raise ValueError(f"unknown correlate scope {scope!r} (only 'linear')")
     tracked: dict[str, dict[int, Rule]] = {}
     conv_rules: dict[int, Rule] = {}
     for r in ruleset.rules:
@@ -281,140 +347,42 @@ def run_correlate(alerts: DataFrame, ruleset: RuleSet, scope: str = "all") -> Da
     if not tracked and not conv_rules:
         return alerts
     schema = alerts.schema
-
-    if tracked:
-        # same bounded-chunk streaming as the conv replay below — and
-        # simpler: track replay is row-at-a-time, so every Arrow batch is
-        # a valid chunk boundary and no rebuffering is needed at all
-        track_chunk = int(os.environ.get("SAGAN_REPLAY_CHUNK_ROWS", str(1 << 21)))
-
-        def _make_replay(rules: dict[int, Rule], col: str):
-            def replay_tracked(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-                carry = _TrackCarry()
-                buf: list[pd.DataFrame] = []
-                nbuf = 0
-                for b in batches:
-                    if not len(b):
-                        continue
-                    buf.append(b)
-                    nbuf += len(b)
-                    if nbuf < track_chunk:
-                        continue
-                    pdf = buf[0] if len(buf) == 1 else pd.concat(buf, ignore_index=True)
-                    out = _replay_tracked_carry(rules, pdf, col, carry)
-                    if len(out):
-                        yield out
-                    buf, nbuf = [], 0
-                if nbuf:
-                    pdf = buf[0] if len(buf) == 1 else pd.concat(buf, ignore_index=True)
-                    out = _replay_tracked_carry(rules, pdf, col, carry)
-                    if len(out):
-                        yield out
-
-            return replay_tracked
-
-        branches = []
-        handled: list[int] = []
-        for col, rules in sorted(tracked.items()):
-            sids = list(rules)
-            handled += sids
-            branches.append(
-                alerts.filter(alerts.sid.isin(sids))
-                .repartition(col)
-                .sortWithinPartitions(col, "ts", "conv_id", "turn_idx", "sid")
-                .mapInPandas(_make_replay(rules, col), schema=schema)
-            )
-        rest = alerts.filter(~alerts.sid.isin(handled))
-        out = run_correlate(rest, RuleSet(tuple(conv_rules.values())), scope)
-        for b in branches:
-            out = out.unionByName(b)
-        return out
-
-    rules_by_sid = conv_rules
-    stateful_sids = list(conv_rules)
-    # Spill guard (SURVEY §4.2): a partition is normally replayed as one
-    # frame (bounded by rows-per-shuffle-partition), but a pathological
-    # hot conversation can make one partition's alert slice arbitrarily
-    # large — the measured straggler turns stage-dominant around ~3×10⁵
-    # matched turns in one conv (BENCH/TUNING.md skew rows). Above
-    # chunk_rows the replay streams the SAME sorted rows through
-    # bounded-size chunks instead, carrying (counters, bits, guard) state
-    # across chunk boundaries — memory bounded by ~chunk_rows + one
-    # (conv, turn) run, identical output (tests force a tiny chunk size).
     chunk_rows = int(os.environ.get("SAGAN_REPLAY_CHUNK_ROWS", str(1 << 21)))
 
-    def replay(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        carry = _ReplayCarry()
-        buf: list[pd.DataFrame] = []
-        nbuf = 0
-        for b in batches:
-            if not len(b):
-                continue
-            buf.append(b)
-            nbuf += len(b)
-            if nbuf < chunk_rows:
-                continue
-            pdf = buf[0] if len(buf) == 1 else pd.concat(buf, ignore_index=True)
-            conv = pdf["conv_id"].to_numpy()
-            turn = pdf["turn_idx"].to_numpy()
-            # split at the LAST (conv, turn)-run boundary — a run must
-            # never be replayed half-seen (checks see pre-turn state)
-            bnd = np.flatnonzero((conv[1:] != conv[:-1]) | (turn[1:] != turn[:-1])) + 1
-            if len(bnd) == 0:
-                buf = [pdf]  # one giant run (sids × one turn) — keep
-                continue  # buffering the already-merged frame, no re-concat
-            split = int(bnd[-1])
-            out = _replay_sorted_carry(rules_by_sid, pdf.iloc[:split], carry)
-            if len(out):
-                yield out
-            buf = [pdf.iloc[split:]]
-            nbuf = len(pdf) - split
-        if nbuf:
-            pdf = buf[0] if len(buf) == 1 else pd.concat(buf, ignore_index=True)
-            out = _replay_sorted_carry(rules_by_sid, pdf, carry)
-            if len(out):
-                yield out
-
-    if scope == "linear":
-        # Strictly ONE consumer of the match subtree: every alert row takes
-        # the conv_id shuffle and flows through the replay (stateless sids
-        # pass through inside _replay_sorted). Costs an Arrow round-trip
-        # for pass-through alerts, but every cost here (shuffle write/read,
-        # sort, Arrow, replay) is per-task parallel — no persist, no
-        # double-compute. This is the default: exchange reuse can NEVER
-        # deduplicate a dual-consumer plan whose subtree contains a Python
-        # stage (MapInPandas does not canonicalize equal across branches —
-        # verified empirically: a pushdown-barriered identical exchange
-        # still executed twice), and a persist materialization contends on
-        # the block manager/disk instead of scaling with cores.
-        return (
-            alerts.repartition("conv_id")
+    handled = [sid for rules in tracked.values() for sid in rules]
+    out = alerts.filter(~alerts.sid.isin(handled)) if handled else alerts
+    if conv_rules:
+        # conv chunks may split only at (conv_id, turn_idx)-run boundaries
+        out = (
+            out.repartition("conv_id")
             .sortWithinPartitions("conv_id", "turn_idx", "sid")
-            .mapInPandas(replay, schema=schema)
+            .mapInPandas(
+                _chunked_replay(
+                    chunk_rows,
+                    lambda: partial(_replay_sorted_carry, conv_rules, carry=_ReplayCarry()),
+                    _last_run_boundary,
+                ),
+                schema=schema,
+            )
         )
-
-    if scope == "all":
-        # dual-consumer shuffle: stateful branch replays in Python, the
-        # stateless branch stays JVM-side. The match subtree computes once
-        # per branch (see "linear" note) — combine with a persisted
-        # upstream (pipeline.build_alerts(persist_intermediate=True)).
-        shuffled = alerts.repartition("conv_id")
-        replayed = (
-            shuffled.filter(shuffled.sid.isin(stateful_sids))
-            .sortWithinPartitions("conv_id", "turn_idx", "sid")
-            .mapInPandas(replay, schema=schema)
+    for col, rules in sorted(tracked.items()):
+        # track replay is row-at-a-time: a chunk may split anywhere
+        out = out.unionByName(
+            alerts.filter(alerts.sid.isin(list(rules)))
+            .repartition(col)
+            .sortWithinPartitions(col, "ts", "conv_id", "turn_idx", "sid")
+            .mapInPandas(
+                _chunked_replay(
+                    chunk_rows,
+                    lambda rules=rules, col=col: partial(
+                        _replay_tracked_carry, rules, key_col=col, carry=_TrackCarry()
+                    ),
+                    len,
+                ),
+                schema=schema,
+            )
         )
-        passthru = shuffled.filter(~shuffled.sid.isin(stateful_sids))
-        return passthru.unionByName(replayed)
-
-    stateful = alerts.filter(alerts.sid.isin(stateful_sids))
-    stateless = alerts.filter(~alerts.sid.isin(stateful_sids))
-    replayed = (
-        stateful.repartition("conv_id")
-        .sortWithinPartitions("conv_id", "turn_idx", "sid")
-        .mapInPandas(replay, schema=schema)
-    )
-    return stateless.unionByName(replayed)
+    return out
 
 
 def sliding_after_counts(df: DataFrame, track_cols: Iterable[str], ts_col: str, seconds: int):

@@ -687,11 +687,8 @@ def run_match(
     UDF candidates cross Arrow — but the input is scanned TWICE. Wins only
     when alert rate is high (dense rule sets) AND the scan is cheap
     (cached/local) — measured at sf0.1 in BENCH/BASELINE.md.
-
-    mode="udf": single scan, every rule evaluated in the vectorized UDF —
-    the fallback when rules are mostly non-native.
     """
-    if mode not in ("fused", "hybrid", "udf"):
+    if mode not in ("fused", "hybrid"):
         # "auto" must be resolved by the caller (pipeline.resolve_match_mode)
         # BEFORE reaching here — hybrid is the fallthrough branch below, and
         # an unknown mode silently becoming a two-scan plan is the kind of
@@ -699,9 +696,6 @@ def run_match(
         raise ValueError(f"unknown match mode {mode!r}")
     dims = _get_dims(fold_dims)
     prepared = _prepare(df)
-    if mode == "udf":
-        return prepared.mapInPandas(make_matcher(ruleset, dims), schema=MATCH_SCHEMA)
-
     folded = {r.sid: _fold_enrich(r, dims) for r in ruleset.rules}
     native_rules = [r for r in ruleset.rules if native_compilable(r)]
     udf_rules = [r for r in ruleset.rules if not native_compilable(r)]

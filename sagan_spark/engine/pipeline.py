@@ -89,7 +89,7 @@ def resolve_match_mode(
     scan-dominated default measured in BENCH/BASELINE.md.
 
     An EXPLICIT mode is honored as given; if it leaves the elision on the
-    table (fused/udf on a bucketed all-native workload) a log line says
+    table (fused on a bucketed all-native workload) a log line says
     so rather than second-guessing the caller.
     """
     all_native = all(match.native_compilable(r) for r in ruleset.rules)
@@ -122,7 +122,7 @@ class PipelineResult:
     def unpersist(self) -> None:
         self.alerts.unpersist()
         # release the enriched intermediate build_alerts persisted for
-        # role-tracked / split-scope rule sets (long-lived sessions would
+        # role/tool-tracked rule sets (long-lived sessions would
         # otherwise accumulate one cached DataFrame per run)
         inner = getattr(self.alerts, "_sagan_persisted", None)
         if inner is not None:
@@ -134,23 +134,19 @@ def build_alerts(
     input_df: DataFrame,
     ruleset: RuleSet = CANONICAL,
     fold_dims: bool = True,
-    correlate_scope: str = "linear",
-    persist_intermediate: bool = False,
     match_mode: str = "auto",
 ) -> DataFrame:
     """The alert DataFrame (lazy).
 
-    Plan: scan → hybrid match (native Column rules + fast-pattern-pruned
-    UDF rules) → broadcast enrich joins → ONE conv_id Exchange → sorted
-    partition replay (stateless alerts pass through inside it) →
-    literal-map rule meta. Strictly linear: the scan + match subtree has
-    exactly one consumer, so nothing recomputes and nothing needs a
-    persist; every stage cost is per-task parallel (scales with cores/
-    executors). See correlate.run_correlate for why the branching
-    alternatives don't scale. For workloads where stateful sids are very
-    rare and alert rows very wide, ``correlate_scope="split"`` +
-    ``persist_intermediate=True`` trades a cache materialization for a
-    smaller shuffle.
+    Plan: scan → match (``match_mode``, see resolve_match_mode) →
+    broadcast enrich joins → ONE conv_id Exchange → sorted partition
+    replay (stateless alerts pass through inside it) → literal-map rule
+    meta. Strictly linear: the scan + match subtree has exactly one
+    consumer, so nothing recomputes and nothing needs a persist; every
+    stage cost is per-task parallel (scales with cores/executors). See
+    correlate.run_correlate for why branching alternatives don't scale.
+    The one exception: role/tool-tracked rules add a replay branch per
+    track column, so the enriched intermediate is persisted.
     """
     from ..packaging import ensure_shipped
 
@@ -178,9 +174,9 @@ def build_alerts(
         r.stateful and r.track in ("role", "tool") for r in ruleset.rules
     )
     persisted = None
-    if (persist_intermediate or has_track_branch) and any(r.stateful for r in ruleset.rules):
+    if has_track_branch:
         enriched = persisted = enriched.persist(StorageLevel.MEMORY_AND_DISK)
-    correlated = correlate.run_correlate(enriched, ruleset, scope=correlate_scope)
+    correlated = correlate.run_correlate(enriched, ruleset)
     out = route.attach_rule_meta(correlated, ruleset)
     if persisted is not None:
         # hand the cache handle to callers (PipelineResult.unpersist)

@@ -47,7 +47,7 @@ from pyspark.sql.types import (
 from .. import fsutil
 from ..datagen import dims as dimsmod
 from ..engine import enrich, match, route
-from ..engine.correlate import counter_emit
+from ..engine.correlate import _replay_sorted_carry, _ReplayCarry, counter_emit
 from ..rules.canonical import CANONICAL
 from ..rules.model import Rule, RuleSet
 
@@ -63,67 +63,6 @@ TRANSCRIPT_SCHEMA = StructType(
 )
 
 STATE_SCHEMA = StructType([StructField("blob", StringType())])
-
-
-def _replay_batch_incremental(
-    rules_by_sid: dict[int, Rule],
-    pdf: pd.DataFrame,
-    counters: dict,
-    bits: dict,
-) -> list:
-    """Replay one conversation's NEW rows (one micro-batch), mutating the
-    carried state. Same semantics as engine/correlate._replay_sorted —
-    kept honest by the streaming≡batch differential test. Returns the
-    pandas index labels of rows that emit."""
-    pdf = pdf.sort_values(["turn_idx", "sid"], kind="mergesort")
-    turn = pdf["turn_idx"].to_numpy()
-    sid = pdf["sid"].to_numpy()
-    tool = pdf["tool"].to_numpy()
-    ts = pdf["ts"].to_numpy().astype("datetime64[us]").astype("int64") / 1_000_000.0
-    emit_rows: list = []
-    n = len(pdf)
-    i = 0
-    while i < n:
-        j = i + 1
-        while j < n and turn[j] == turn[i]:
-            j += 1
-        pending_sets: list[tuple[str, str, float, float | None]] = []
-        for k in range(i, j):
-            rule = rules_by_sid[int(sid[k])]
-            t = ts[k]
-            detected = True
-            for fb in rule.flexbits:
-                if fb.action in ("isset", "isnotset"):
-                    cur = bits.get(fb.name)
-                    is_set = cur is not None and (cur[1] is None or (t - cur[0]) <= cur[1])
-                    if (fb.action == "isset") != is_set:
-                        detected = False
-            if not detected:
-                continue
-            emit = True
-            if (rule.after or rule.threshold) is not None:
-                # state-blob keys are JSON strings; repr() of the tool
-                # keeps None distinct from the string 'None'
-                key = (
-                    f"{rule.sid}|{tool[k]!r}"
-                    if rule.track == "conv_tool"
-                    else str(rule.sid)
-                )
-                emit = counter_emit(rule, counters, key, t)
-            for fb in rule.flexbits:
-                if fb.action in ("set", "unset"):
-                    pending_sets.append(
-                        (fb.action, fb.name, t, float(fb.expire) if fb.expire is not None else None)
-                    )
-            if emit:
-                emit_rows.append(pdf.index[k])
-        for action, name, t, exp in pending_sets:
-            if action == "set":
-                bits[name] = (t, exp)
-            else:
-                bits.pop(name, None)
-        i = j
-    return emit_rows
 
 
 def _make_role_state_fn(
@@ -325,9 +264,15 @@ def _make_state_fn(ruleset: RuleSet, out_cols: list[str], ttl_minutes: int | Non
                 pdf = pdf.loc[~late_mask]
             if len(pdf):
                 last_turn = max(last_turn, int(pdf["turn_idx"].max()))
-                keep = _replay_batch_incremental(rules_by_sid, pdf, counters, bits)
-                if keep:
-                    outs.append(pdf.loc[keep, out_cols])
+                # the batch engine's conv replay kernel, seeded with this
+                # conversation's carried state
+                carry = _ReplayCarry()
+                carry.counters, carry.bits, carry.cur_conv = counters, bits, key[0]
+                emitted = _replay_sorted_carry(
+                    rules_by_sid, pdf.sort_values(["turn_idx", "sid"], kind="mergesort"), carry
+                )
+                if len(emitted):
+                    outs.append(emitted[out_cols])
         state.update(
             (
                 json.dumps(

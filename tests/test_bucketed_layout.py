@@ -159,13 +159,49 @@ def test_auto_mode_resolution(spark, bucketed):
         )
     )
     assert resolve_match_mode(bdf, grokked, "auto") == "fused"
-    for explicit in ("fused", "hybrid", "udf"):
+    for explicit in ("fused", "hybrid"):
         assert resolve_match_mode(bdf, NATIVE_RS, explicit) == explicit
     # unresolved "auto" must never leak into run_match's hybrid fallthrough
     from sagan_spark.engine import match as matchmod
 
     with pytest.raises(ValueError, match="unknown match mode"):
         matchmod.run_match(bdf, NATIVE_RS, mode="auto")
+
+
+class _QueryExecutionRaises:
+    """A Dataset handle whose queryExecution() raises (a py4j/Spark-internal
+    API change); every other call goes to the real Java Dataset."""
+
+    def __init__(self, jdf):
+        self._real = jdf
+
+    def queryExecution(self):
+        raise RuntimeError("forced planner-probe failure")
+
+    def __getattr__(self, name):
+        return getattr(self._real, name)
+
+
+def test_bucketed_probe_failure_falls_back_to_fused(spark, bucketed, monkeypatch):
+    """_scan_bucketed_by reads Spark internals over py4j; when that probe
+    fails, auto must fall back to the always-correct fused plan (conv_id
+    exchange kept) even on a bucketed all-native input, with the same
+    alerts as the hybrid run."""
+    from sagan_spark.engine.pipeline import build_alerts, resolve_match_mode
+
+    _, table = bucketed
+    bdf = spark.table(table)
+    monkeypatch.setattr(bdf, "_jdf", _QueryExecutionRaises(bdf._jdf))
+    assert resolve_match_mode(bdf, NATIVE_RS, "auto") == "fused"
+    fallback = build_alerts(spark, bdf, NATIVE_RS)
+    assert _n_conv_exchanges(fallback) >= 1
+    rows = lambda df: sorted(  # noqa: E731
+        (r.conv_id, int(r.turn_idx), int(r.sid))
+        for r in df.select("conv_id", "turn_idx", "sid").collect()
+    )
+    got = rows(fallback)
+    assert got == rows(_alerts(spark, spark.table(table), "hybrid"))
+    assert len(got) > 0
 
 
 def test_pipeline_run_on_catalog_identifier_elides_exchange(spark, bucketed):

@@ -85,6 +85,7 @@ def test_comment_and_quote_edge_cases():
         "rules:\n  not-a-list-item",  # malformed list
         "  orphan: 1",  # indented line outside a section
         "mode: nonsense",  # validated enum
+        "engine:\n  match_mode: udf",  # removed match mode
     ],
 )
 def test_bad_config_fails_loudly(bad):
@@ -112,7 +113,7 @@ def test_round_trip_property():
             output=st.one_of(st.none(), path),
             mode=st.sampled_from(["batch", "resumable", "stream", "dynamic"]),
             rules=st.lists(path, max_size=3).map(tuple),
-            match_mode=st.sampled_from(["fused", "hybrid", "udf"]),
+            match_mode=st.sampled_from(["fused", "hybrid"]),
             fold_dims=st.booleans(),
             shuffle_partitions=st.one_of(st.none(), st.integers(1, 10000)),
             master=st.one_of(st.none(), st.just("local[8]")),

@@ -23,9 +23,7 @@ def _plans(spark, tiny_path, match_mode: str) -> tuple[str, str]:
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
         df = spark.read.parquet(tiny_path)
-        alerts = pipeline.build_alerts(
-            spark, df, CANONICAL, persist_intermediate=False, match_mode=match_mode
-        )
+        alerts = pipeline.build_alerts(spark, df, CANONICAL, match_mode=match_mode)
         return _explain(spark, alerts), _explain(spark, alerts, "simple")
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", "true")

@@ -58,7 +58,7 @@ def _diff_random(spark, pdf, ruleset):
     want = run_oracle(pdf, ruleset)
     df = spark.createDataFrame(pdf)
     df = df.withColumn("ts", df.ts.cast("timestamp_ntz"))
-    alerts = pipeline.build_alerts(spark, df, ruleset, persist_intermediate=False)
+    alerts = pipeline.build_alerts(spark, df, ruleset)
     got = sorted(
         (r.conv_id, r.turn_idx, r.sid, r.text)
         for r in alerts.select("conv_id", "turn_idx", "sid", "text").collect()

@@ -356,12 +356,19 @@ def test_ruleset_rejects_depends_on_noalert_parent():
 
 
 # ---------------------------------------------------------------------------
-# fused / hybrid / udf match modes must agree, including extraction edges
+# fused / hybrid match modes and the all-rules vectorized-pandas matcher
+# must agree, including extraction edges
 # ---------------------------------------------------------------------------
 
 
 def test_match_modes_equal_including_extraction(spark, tiny_path):
-    from sagan_spark.engine.match import run_match
+    from sagan_spark.engine.match import (
+        MATCH_SCHEMA,
+        _get_dims,
+        _prepare,
+        make_matcher,
+        run_match,
+    )
     from sagan_spark.rules.canonical import CANONICAL
     from sagan_spark.rules.model import HashSpec
 
@@ -387,19 +394,20 @@ def test_match_modes_equal_including_extraction(spark, tiny_path):
         )
     )
     df = spark.read.parquet(tiny_path)
+    plans = {mode: run_match(df, rs, mode=mode) for mode in ("fused", "hybrid")}
+    # third reference: every rule through the vectorized pandas matcher
+    plans["pandas"] = _prepare(df).mapInPandas(
+        make_matcher(rs, _get_dims(True)), schema=MATCH_SCHEMA
+    )
     results = {}
-    for mode in ("fused", "hybrid", "udf"):
-        rows = (
-            run_match(df, rs, mode=mode)
-            .select("conv_id", "turn_idx", "sid", "extracted")
-            .collect()
-        )
-        results[mode] = sorted(
+    for name, matched in plans.items():
+        rows = matched.select("conv_id", "turn_idx", "sid", "extracted").collect()
+        results[name] = sorted(
             (r.conv_id, r.turn_idx, r.sid, tuple(sorted((r.extracted or {}).items())))
             for r in rows
         )
     assert results["fused"] == results["hybrid"], "fused != hybrid"
-    assert results["fused"] == results["udf"], "fused != udf"
+    assert results["fused"] == results["pandas"], "fused != vectorized pandas"
     assert any(r[2] == 2000050 for r in results["fused"])
     assert all(
         dict(r[3]).get("proto") == "tcp"

@@ -1,12 +1,16 @@
 """Unit tests for the defined rule semantics (rules/model.py docstrings) —
 the hard parts from SURVEY §7.4: content-chain positioning, counter reset
-windows, flexbit expiry, turn-boundary set/check ordering. Pure Python +
-pandas oracle; no Spark session needed (fast)."""
+windows, flexbit expiry, turn-boundary set/check ordering. The stateful
+cases run through the pandas oracle AND the engine's replay kernel, both
+as the batch replay and as the streaming conv state function (one
+micro-batch per turn, state carried through its JSON blob). Pure Python +
+pandas; no Spark session needed (fast)."""
 
 from __future__ import annotations
 
 import pandas as pd
 
+from sagan_spark.engine.correlate import _replay_sorted
 from sagan_spark.oracle.pandas_engine import run_oracle
 from sagan_spark.rules.eval import match_contents, match_stateless
 from sagan_spark.rules.model import (
@@ -17,6 +21,7 @@ from sagan_spark.rules.model import (
     RuleSet,
     ThresholdSpec,
 )
+from sagan_spark.streaming.pipeline import _make_state_fn
 
 
 def _rule(**kw) -> Rule:
@@ -81,6 +86,65 @@ def _frame(rows):
     )
 
 
+def _match_rows(frame: pd.DataFrame, rs: RuleSet) -> pd.DataFrame:
+    """The match stage's output for ``frame`` — one row per (turn, rule)
+    whose stateless part matches, sorted (conv_id, turn_idx, sid): the
+    input both replay kernels see."""
+    rows = [
+        (r.conv_id, r.turn_idx, rule.sid, r.tool, r.ts)
+        for r in frame.itertuples(index=False)
+        for rule in rs.rules
+        if match_stateless(rule, r.text, r.role, r.tool, r.ts.hour, r.ts.weekday() + 1)
+        is not None
+    ]
+    pdf = pd.DataFrame(rows, columns=["conv_id", "turn_idx", "sid", "tool", "ts"])
+    pdf["ts"] = pdf["ts"].astype("datetime64[us]")
+    return pdf.sort_values(["conv_id", "turn_idx", "sid"], kind="mergesort")
+
+
+def _alert_turns(emitted: pd.DataFrame, rs: RuleSet) -> list[int]:
+    noalert = [r.sid for r in rs.rules if r.noalert]
+    return sorted(int(t) for t in emitted.loc[~emitted["sid"].isin(noalert), "turn_idx"])
+
+
+def _oracle_turns(frame: pd.DataFrame, rs: RuleSet) -> list[int]:
+    return sorted(a["turn_idx"] for a in run_oracle(frame, rs).alerts)
+
+
+def _batch_turns(frame: pd.DataFrame, rs: RuleSet) -> list[int]:
+    rules = {r.sid: r for r in rs.rules if r.stateful}
+    return _alert_turns(_replay_sorted(rules, _match_rows(frame, rs)), rs)
+
+
+class _State:
+    """Just enough GroupState to drive a state function across batches."""
+
+    exists, get, hasTimedOut = False, None, False
+
+    def update(self, t):
+        self.exists, self.get = True, t
+
+
+def _stream_turns(frame: pd.DataFrame, rs: RuleSet) -> list[int]:
+    rows = _match_rows(frame, rs)
+    fn, state = _make_state_fn(rs, list(rows.columns)), _State()
+    outs = [
+        out
+        for _, batch in rows.groupby("turn_idx", sort=True)
+        for out in fn(("c1",), iter([batch]), state)
+    ]
+    return _alert_turns(pd.concat(outs) if outs else rows.iloc[:0], rs)
+
+
+def _turns(frame: pd.DataFrame, rs: RuleSet) -> list[int]:
+    """Alerting turns, asserted equal across the oracle, the batch replay
+    and the streaming state function (one test id per case, not one per
+    implementation)."""
+    got = {f.__name__: f(frame, rs) for f in (_oracle_turns, _batch_turns, _stream_turns)}
+    assert len(set(map(tuple, got.values()))) == 1, got
+    return got["_oracle_turns"]
+
+
 def test_after_reset_window():
     rs = RuleSet(
         (
@@ -92,13 +156,11 @@ def test_after_reset_window():
     )
     # window anchored at first event; count>2 fires
     rows = [("hit", 0), ("hit", 10), ("hit", 20), ("hit", 30)]  # counts 1,2,3,4
-    res = run_oracle(_frame(rows), rs)
-    assert [a["turn_idx"] for a in res.alerts] == [2, 3]
+    assert _turns(_frame(rows), rs) == [2, 3]
     # gap beyond window resets the counter (event at 150 > 0+100)
     rows = [("hit", 0), ("hit", 10), ("hit", 150), ("hit", 160), ("hit", 170)]
-    res = run_oracle(_frame(rows), rs)
     # counts: 1,2 then reset→1,2,3 — only the last fires
-    assert [a["turn_idx"] for a in res.alerts] == [4]
+    assert _turns(_frame(rows), rs) == [4]
 
 
 def test_threshold_limit_and_every_nth():
@@ -111,8 +173,7 @@ def test_threshold_limit_and_every_nth():
         )
     )
     rows = [("x", 0), ("x", 10), ("x", 20), ("x", 130)]  # 1,2,3 then reset→1
-    res = run_oracle(_frame(rows), lim)
-    assert [a["turn_idx"] for a in res.alerts] == [0, 1, 3]
+    assert _turns(_frame(rows), lim) == [0, 1, 3]
 
     nth = RuleSet(
         (
@@ -123,8 +184,7 @@ def test_threshold_limit_and_every_nth():
         )
     )
     rows = [("x", 0), ("x", 1), ("x", 2), ("x", 3)]
-    res = run_oracle(_frame(rows), nth)
-    assert [a["turn_idx"] for a in res.alerts] == [1, 3]  # every 2nd
+    assert _turns(_frame(rows), nth) == [1, 3]  # every 2nd
 
 
 # ---- flexbits (C3): expiry + same-turn ordering -----------------------------
@@ -145,16 +205,14 @@ FLEX_RS = RuleSet(
 
 def test_flexbit_expiry():
     rows = [("login failed", 0), ("sudo", 50), ("sudo", 150)]
-    res = run_oracle(_frame(rows), FLEX_RS)
-    assert [a["turn_idx"] for a in res.alerts] == [1]  # 150-0 > 100 expired
+    assert _turns(_frame(rows), FLEX_RS) == [1]  # 150-0 > 100 expired
 
 
 def test_flexbit_same_turn_does_not_see_own_set():
     rows = [("login failed sudo", 0), ("sudo", 10)]
-    res = run_oracle(_frame(rows), FLEX_RS)
     # turn 0: checker runs against pre-turn state (unset) → no fire;
     # turn 1: bit set at t=0, 10-0 <= 100 → fires
-    assert [a["turn_idx"] for a in res.alerts] == [1]
+    assert _turns(_frame(rows), FLEX_RS) == [1]
 
 
 def test_required_literal_soundness():
@@ -202,5 +260,4 @@ def test_flexbit_unset():
         )
     )
     rows = [("set it", 0), ("sudo", 10), ("clear it", 20), ("sudo", 30)]
-    res = run_oracle(_frame(rows), rs)
-    assert [a["turn_idx"] for a in res.alerts] == [1]
+    assert _turns(_frame(rows), rs) == [1]
